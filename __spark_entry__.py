@@ -63,11 +63,10 @@ def _registries():
     from stac_geoparquet_spark.streaming import rollup as streaming_rollup
     from stac_geoparquet_spark.streaming import semdedup as streaming_semdedup
 
-    # Order matters: the driver's CORRECTNESS file has evaluated exactly
-    # the FIRST 50 registry entries each round (confirmed r1 + r2), so
-    # insertion order is the lever for hard correctness signals.  All
-    # modules merge into one pool; the generated WINDOW list (below)
-    # pins the round's first-50.
+    # Every query, window or not, registers in its module's QUERIES /
+    # ORACLE; the generated WINDOW list (below) decides which 50 lead
+    # the registry, since each CORRECTNESS file records exactly the
+    # first 50 entries.
     modules = [
         stac_query,
         audit,
@@ -95,31 +94,19 @@ def _registries():
         relational_ext3,
         relational_tpch2,
         retrieval,
-    ]
-    rotation = [
-        (pipeline.QUERIES_ROTATION, pipeline.ORACLE_ROTATION),
-        (text.QUERIES_ROTATION, text.ORACLE_ROTATION),
-        (similarity.QUERIES_ROTATION, similarity.ORACLE_ROTATION),
-        (curation.QUERIES_ROTATION, curation.ORACLE_ROTATION),
-        (streaming_decontam.QUERIES, streaming_decontam.ORACLE),
-        (streaming_semdedup.QUERIES, streaming_semdedup.ORACLE),
-        (streaming_quota.QUERIES, streaming_quota.ORACLE),
-        (streaming_novelty.QUERIES, streaming_novelty.ORACLE),
-        (streaming_histogram.QUERIES, streaming_histogram.ORACLE),
-        (streaming_controlchart.QUERIES, streaming_controlchart.ORACLE),
-        (multimodal.QUERIES_ROTATION, multimodal.ORACLE_ROTATION),
-        (stats.QUERIES_ROTATION, stats.ORACLE_ROTATION),
-        (scan_opt.QUERIES_ROTATION, scan_opt.ORACLE_ROTATION),
-        (quality.QUERIES_ROTATION, quality.ORACLE_ROTATION),
+        curation,
+        streaming_decontam,
+        streaming_semdedup,
+        streaming_quota,
+        streaming_novelty,
+        streaming_histogram,
+        streaming_controlchart,
     ]
     pool: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     pool_oracle: dict[str, str] = {}
     for m in modules:
         pool.update(m.QUERIES)
         pool_oracle.update(m.ORACLE)
-    for q, o in rotation:
-        pool.update(q)
-        pool_oracle.update(o)
 
     # The 50-entry driver window is GENERATED — run
     # ``python tools/gen_ledger.py --emit-window`` at round start
@@ -149,113 +136,68 @@ def _registries():
 # with the reason; gen_ledger slots them right after the never-row
 # group.  Clear entries once they re-earn a green row.
 CHURNED_THIS_ROUND: list[str] = [
-    # The r10 optimization round structurally rewrote these 22 AFTER
-    # the r10 window was generated, so none has a driver row on the
-    # rewritten shape (r10 VERDICT gate section; its task #1 is this
-    # exact list).  The r10 URL/DiD churn entries all re-earned green
-    # r10 rows and are cleared.
-    "dedup_containment",
-    "q2_best_supplier_per_part",
-    "q21_waiting_suppliers",
-    "bm25_topk_retrieval",
-    "bm25_incremental_scoring",
-    "classifier_calibration_bins",
-    "pack_sequences",
-    "hll_event_type_overlap",
-    "kmeans_silhouette",
-    "kmeans_embeddings",
-    "events_rollup_incremental",
-    "part_affinity_topk",
-    "decontaminate_against_holdout",
-    "decontam_incremental",
-    "tokenize_bpe_encode",
-    "tokenize_bpe_roundtrip",
-    "cross_lang_contamination",
-    "split_unigram_jsd",
-    "edit_distance_join",
-    "user_path_entropy",
-    "events_conversion_paths",
-    "mm_phash_dedup",
-    # The r11 optimization round's own plan-changing rewrites (fence ->
-    # in-plan windows / 1-row broadcasts, fence drops covered by AQE
-    # stage reuse, the hybrid-RRF identical-tf-subtree shape) — front-
-    # loaded so each re-earns a driver row on its rewritten shape, the
-    # exact window-vs-rewrite skew the r10 verdict called out.
-    # part_affinity_topk and events_conversion_paths were also
-    # r11-rewritten but already sit in the r10 list above.
-    "hybrid_rrf_retrieval",
-    "classifier_lift_gains",
-    "events_bootstrap_ci",
-    "events_fdr_bh",
-    "events_anomaly_mad",
-    "events_attribution_last_touch",
-    "orders_stl_decompose",
-    "text_heaps_law_fit",
-    "graph_eigenvector_centrality",
-    "pagerank_neardup_graph",
-    "dsir_importance_weights",
-    "er_fellegi_sunter",
-    "rm3_expansion_terms",
-    "bm25_ndcg_report",
-    "embedding_standardize",
-    "embedding_norm_outliers",
+    # Every entry of the previous list earned a green r11 row and is
+    # cleared.  These two were rewritten in r11 to rely on AQE exchange
+    # reuse, and neither has a CORRECTNESS row on its rewritten shape.
+    "pca_power_projection",
+    "matryoshka_recall_report",
 ]
 
 # WINDOW:BEGIN (generated by tools/gen_ledger.py --emit-window)
-# 0 never-row + 38 churned + 12 oldest-green-first (driver rounds seen: r01, r02, r03, r04, r05, r06, r07, r08, r09, r10)
+# 0 never-row + 2 churned + 48 oldest-green-first (driver rounds seen: r01, r02, r03, r04, r05, r06, r07, r08, r09, r10, r11)
 WINDOW: list[str] = [
     # churned read path (CHURNED_THIS_ROUND)
-    "dedup_containment",
-    "q2_best_supplier_per_part",
-    "q21_waiting_suppliers",
-    "bm25_topk_retrieval",
-    "bm25_incremental_scoring",
-    "classifier_calibration_bins",
-    "pack_sequences",
-    "hll_event_type_overlap",
-    "kmeans_silhouette",
-    "kmeans_embeddings",
-    "events_rollup_incremental",
-    "part_affinity_topk",
-    "decontaminate_against_holdout",
-    "decontam_incremental",
-    "tokenize_bpe_encode",
-    "tokenize_bpe_roundtrip",
-    "cross_lang_contamination",
-    "split_unigram_jsd",
-    "edit_distance_join",
-    "user_path_entropy",
-    "events_conversion_paths",
-    "mm_phash_dedup",
-    "hybrid_rrf_retrieval",
-    "classifier_lift_gains",
-    "events_bootstrap_ci",
-    "events_fdr_bh",
-    "events_anomaly_mad",
-    "events_attribution_last_touch",
-    "orders_stl_decompose",
-    "text_heaps_law_fit",
-    "graph_eigenvector_centrality",
-    "pagerank_neardup_graph",
-    "dsir_importance_weights",
-    "er_fellegi_sunter",
-    "rm3_expansion_terms",
-    "bm25_ndcg_report",
-    "embedding_standardize",
-    "embedding_norm_outliers",
+    "pca_power_projection",
+    "matryoshka_recall_report",
     # oldest green row first
-    "except_open_not_finished",
-    "graph_triangle_count",
-    "grouping_sets_revenue",
-    "histogram_totalprice",
-    "lang_confusion_matrix",
-    "mixture_temperature_weights",
-    "percentile_prices_by_priority",
-    "pivot_status_by_priority",
-    "q10_returned_items",
-    "q11_important_supplier_value",
-    "q12_ship_delay_priority",
-    "q13_customer_distribution",
+    "q14_promo_effect",
+    "q15_top_supplier",
+    "q16_supplier_diversity",
+    "q17_small_qty_revenue",
+    "q18_large_volume_customers",
+    "q19_disjunctive_revenue",
+    "q20_excess_suppliers",
+    "q22_idle_customers",
+    "q4_priority_late_orders",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_profit",
+    "quality_classifier_trained",
+    "quality_winsorize",
+    "rollup_customers",
+    "scd2_customer_segments",
+    "semdedup_incremental",
+    "sketch_hll_distinct",
+    "sketch_hll_incremental",
+    "sketch_kmv_distinct",
+    "text_lang_id",
+    "text_pii_scrub",
+    "agg_pushdown_stats",
+    "ann_ivf_probe",
+    "ann_lsh_bucketed",
+    "ann_pq_adc",
+    "approx_distinct_parts",
+    "approx_percentile_prices",
+    "asof_last_click_before_purchase",
+    "chunk_documents",
+    "cql2_flagship_query",
+    "cql2_orders_filter",
+    "cql2_text_lineitem_filter",
+    "dedup_lines_across_docs",
+    "dedup_rate_by_source",
+    "dpp_orders_by_year",
+    "events_markov_transitions",
+    "events_rfm_segments",
+    "funnel_latency_quantiles",
+    "graph_degree_distribution",
+    "ivf_cell_assignment",
+    "minhash_signature_source_sim",
+    "mm_frame_sample",
+    "mm_media_manifest",
+    "outliers_iqr_price",
+    "pq_encode_codes",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
 ]
 # WINDOW:END
 

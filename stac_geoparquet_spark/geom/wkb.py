@@ -21,7 +21,14 @@ from __future__ import annotations
 
 import json
 import struct
+import sys
 from typing import Any
+
+from pyspark import cloudpickle
+
+# the codec runs inside Arrow UDF workers: ship its functions by value
+# so workers need no copy of the package on their path
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _TYPE_CODES = {
     "Point": 1,

@@ -1604,7 +1604,7 @@ GROUP BY source
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "tokenize_unigram_eval": tokenize_unigram_eval,
     "tokenize_bpe_encode": tokenize_bpe_encode,
     "tokenize_bpe_roundtrip": tokenize_bpe_roundtrip,
@@ -1621,7 +1621,7 @@ QUERIES_ROTATION = {
     "fingerprint_winnowing": fingerprint_winnowing,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "tokenize_unigram_eval": TOKENIZE_UNIGRAM_SQL,
     "tokenize_bpe_encode": TOKENIZE_BPE_SQL,
     "tokenize_bpe_roundtrip": BPE_ROUNDTRIP_SQL,
@@ -1832,8 +1832,8 @@ agg AS (
 """
 
 
-QUERIES_ROTATION["er_fellegi_sunter"] = er_fellegi_sunter
-ORACLE_ROTATION["er_fellegi_sunter"] = _fs_oracle_sql()
+QUERIES["er_fellegi_sunter"] = er_fellegi_sunter
+ORACLE["er_fellegi_sunter"] = _fs_oracle_sql()
 
 
 # --------------------------------------------------------------------------
@@ -1976,5 +1976,5 @@ FROM curve CROSS JOIN fit
 """
 
 
-QUERIES_ROTATION["text_heaps_law_fit"] = text_heaps_law_fit
-ORACLE_ROTATION["text_heaps_law_fit"] = HEAPS_SQL
+QUERIES["text_heaps_law_fit"] = text_heaps_law_fit
+ORACLE["text_heaps_law_fit"] = HEAPS_SQL

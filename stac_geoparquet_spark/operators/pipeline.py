@@ -1338,10 +1338,6 @@ def _cap_oracle_sql() -> str:
     )
 
 
-# Rotation block: locally strict-gated like everything else, but
-# registered AFTER the 50-entry driver window this round (see
-# __spark_entry__._registries) — they rotate into the window next
-# round.
 # --------------------------------------------------------------------------
 # Deterministic weighted sampling without replacement (Efraimidis-
 # Spirakis A-ES): every doc draws u in (0, 1) from md5(doc_id) and is
@@ -1624,7 +1620,7 @@ FROM ranked
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "corpus_gini_balance": corpus_gini_balance,
     "mixture_epoch_allocation": mixture_epoch_allocation,
     "sample_weighted_k": sample_weighted_k,
@@ -1635,7 +1631,7 @@ QUERIES_ROTATION = {
     "corpus_yield_funnel": corpus_yield_funnel,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "corpus_gini_balance": GINI_SQL,
     "mixture_epoch_allocation": EPOCH_ALLOC_SQL,
     "sample_weighted_k": SAMPLE_WEIGHTED_SQL,

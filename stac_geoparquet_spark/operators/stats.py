@@ -482,9 +482,6 @@ QUERIES = {
     "sketch_kmv_distinct": sketch_kmv_distinct,
 }
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
 # --------------------------------------------------------------------------
 # KMV set-intersection sketch: estimated distinct-content overlap
 # between every pair of corpus sources — the cross-dump dedup planning
@@ -1234,7 +1231,7 @@ FROM (
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "ols_discount_response": ols_discount_response,
     "hll_event_type_overlap": hll_event_type_overlap,
     "minhash_signature_source_sim": minhash_signature_source_sim,
@@ -1244,7 +1241,7 @@ QUERIES_ROTATION = {
     "sketch_hll_incremental": sketch_hll_incremental,
 }
 
-ORACLE_ROTATION = {
+ORACLE = {
     "ols_discount_response": OLS_SQL,
     "hll_event_type_overlap": HLL_OVERLAP_SQL,
     "minhash_signature_source_sim": _mhsig_oracle_sql(),
@@ -1254,7 +1251,7 @@ ORACLE_ROTATION = {
     "sketch_hll_incremental": SKETCH_HLL_INCR_SQL,
 }
 
-ORACLE = {
+ORACLE |= {
     "sample_stratified": _sample_stratified_oracle(),
     "sample_fixed_k": _sample_fixed_k_oracle(),
     "stats_quantity_price": STATS_SQL,
@@ -1402,8 +1399,8 @@ WHERE r = CAST(floor((CAST(n AS DOUBLE) - 1.0) * quantile) AS BIGINT)
 """
 
 
-QUERIES_ROTATION["quantiles_user_value_exact"] = quantiles_user_value_exact
-ORACLE_ROTATION["quantiles_user_value_exact"] = QUANTILES_EXACT_SQL
+QUERIES["quantiles_user_value_exact"] = quantiles_user_value_exact
+ORACLE["quantiles_user_value_exact"] = QUANTILES_EXACT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1551,5 +1548,5 @@ FROM cum JOIN qs
 """
 
 
-QUERIES_ROTATION["approx_quantiles_histogram"] = approx_quantiles_histogram
-ORACLE_ROTATION["approx_quantiles_histogram"] = APPROX_QUANTILES_SQL
+QUERIES["approx_quantiles_histogram"] = approx_quantiles_histogram
+ORACLE["approx_quantiles_histogram"] = APPROX_QUANTILES_SQL

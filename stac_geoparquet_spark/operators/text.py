@@ -1316,9 +1316,6 @@ GROUP BY lang
 """
 
 
-# Rotation block: registered after the driver window (see
-# __spark_entry__._registries); locally strict-gated like everything
-# else.
 # --------------------------------------------------------------------------
 # Per-source unigram KL divergence vs the whole corpus — the mixture-
 # design diagnostic (a source whose token distribution diverges hard
@@ -1827,7 +1824,7 @@ GROUP BY bin
 """
 
 
-QUERIES_ROTATION = {
+QUERIES = {
     "classifier_calibration_bins": classifier_calibration_bins,
     "text_token_entropy": text_token_entropy,
     "vocab_oov_rate_by_lang": vocab_oov_rate_by_lang,
@@ -1843,7 +1840,7 @@ QUERIES_ROTATION = {
     "text_nfc_audit": text_nfc_audit,
 }
 
-ORACLE_ROTATION = {
+ORACLE = {
     "classifier_calibration_bins": CALIBRATION_SQL,
     "text_token_entropy": TOKEN_ENTROPY_SQL,
     "vocab_oov_rate_by_lang": OOV_RATE_SQL,
@@ -1860,7 +1857,7 @@ ORACLE_ROTATION = {
 }
 
 
-QUERIES = {
+QUERIES |= {
     "text_token_count": text_token_count,
     "text_tfidf_top_terms": text_tfidf_top_terms,
     "text_quality_score": text_quality_score,
@@ -1873,7 +1870,7 @@ QUERIES = {
     "text_unigram_logppl": text_unigram_logppl,
 }
 
-ORACLE = {
+ORACLE |= {
     "text_token_count": TOKEN_COUNT_SQL,
     "text_tfidf_top_terms": TFIDF_SQL,
     "text_quality_score": QUALITY_SQL,
@@ -1954,8 +1951,8 @@ FROM counts GROUP BY source
 """
 
 
-QUERIES_ROTATION["lexical_diversity_by_source"] = lexical_diversity_by_source
-ORACLE_ROTATION["lexical_diversity_by_source"] = LEXDIV_SQL
+QUERIES["lexical_diversity_by_source"] = lexical_diversity_by_source
+ORACLE["lexical_diversity_by_source"] = LEXDIV_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2050,8 +2047,8 @@ FROM counted
 """
 
 
-QUERIES_ROTATION["text_script_mix_audit"] = text_script_mix_audit
-ORACLE_ROTATION["text_script_mix_audit"] = _script_mix_sql()
+QUERIES["text_script_mix_audit"] = text_script_mix_audit
+ORACLE["text_script_mix_audit"] = _script_mix_sql()
 
 
 # --------------------------------------------------------------------------
@@ -2142,8 +2139,8 @@ FROM per_doc
 """
 
 
-QUERIES_ROTATION["text_mattr_diversity"] = text_mattr_diversity
-ORACLE_ROTATION["text_mattr_diversity"] = MATTR_SQL
+QUERIES["text_mattr_diversity"] = text_mattr_diversity
+ORACLE["text_mattr_diversity"] = MATTR_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2297,5 +2294,5 @@ FROM cum CROSS JOIN tot
 """
 
 
-QUERIES_ROTATION["classifier_lift_gains"] = classifier_lift_gains
-ORACLE_ROTATION["classifier_lift_gains"] = LIFT_SQL
+QUERIES["classifier_lift_gains"] = classifier_lift_gains
+ORACLE["classifier_lift_gains"] = LIFT_SQL

@@ -80,43 +80,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-_SHIPPED_APPS: set[str] = set()
-
-
-def ensure_worker_imports(spark: SparkSession) -> None:
-    """Make this package importable on Python workers regardless of the
-    driver's cwd/session origin.
-
-    cloudpickle serializes *importable module-level functions* by
-    reference (module + qualname), so a worker-side closure that calls
-    one (e.g. the NDJSON sink's ``row_to_item``) needs the package on
-    the worker's import path. When the driver session was built by
-    external code from an arbitrary cwd, that isn't guaranteed — so
-    zip the package once per application and ``addPyFile`` it; Spark
-    distributes the zip and workers prepend it to sys.path before
-    unpickling. Self-contained closures (the GEMM scorers) don't need
-    this; call it from any operator that ships module references."""
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED_APPS:
-        return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"stac_geoparquet_spark-pyfiles-{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_APPS.add(app)
-
-
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
     """Register the driver testdata parquet tables as temp views.
 

@@ -26,24 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from stac_geoparquet_spark.stac.constants import (
+    BBOX_FIELDS,
     STAC_GEOPARQUET_VERSION,
     WGS84_PROJJSON,
+    geometry_paths,
 )
 
 SUPPORTED_VERSIONS = ("1.0.0", "1.1.0")
-
-
-def _geometry_columns(schema: T.StructType) -> list[str]:
-    """Top-level WKB geometry columns: ``geometry`` plus
-    ``proj:geometry`` when hoisted (arrow/_to_parquet.py:115-127)."""
-    out = []
-    for f in schema.fields:
-        if isinstance(f.dataType, T.BinaryType) and f.name in (
-            "geometry",
-            "proj:geometry",
-        ):
-            out.append(f.name)
-    return out
 
 
 def build_geo_metadata(
@@ -56,8 +45,11 @@ def build_geo_metadata(
         raise ValueError(
             f"schema_version must be one of {SUPPORTED_VERSIONS}, got {schema_version!r}"
         )
+    # top-level WKB columns only: ``geometry`` plus the hoisted
+    # ``proj:geometry`` (arrow/_to_parquet.py:115-127)
+    top_level = [p[0] for p in geometry_paths(schema, T.BinaryType) if len(p) == 1]
     columns: dict[str, Any] = {}
-    for name in _geometry_columns(schema):
+    for name in top_level:
         col: dict[str, Any] = {
             "encoding": "WKB",
             "geometry_types": [],
@@ -66,14 +58,7 @@ def build_geo_metadata(
             col["crs"] = WGS84_PROJJSON
             col["edges"] = "planar"
             if schema_version >= "1.1.0" and _has_bbox_struct(schema):
-                col["covering"] = {
-                    "bbox": {
-                        "xmin": ["bbox", "xmin"],
-                        "ymin": ["bbox", "ymin"],
-                        "xmax": ["bbox", "xmax"],
-                        "ymax": ["bbox", "ymax"],
-                    }
-                }
+                col["covering"] = {"bbox": {n: ["bbox", n] for n in BBOX_FIELDS[4]}}
         else:
             # proj:geometry is in the asset/item's own projection; the
             # reference writes crs: null for it
@@ -98,9 +83,7 @@ def _has_bbox_struct(schema: T.StructType) -> bool:
         dt = schema["bbox"].dataType
     except KeyError:
         return False
-    return isinstance(dt, T.StructType) and {"xmin", "ymin", "xmax", "ymax"} <= {
-        f.name for f in dt.fields
-    }
+    return isinstance(dt, T.StructType) and set(BBOX_FIELDS[4]) <= set(dt.names)
 
 
 def build_stac_metadata(

@@ -27,13 +27,19 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import sys
 from collections.abc import Callable, Iterable
 from typing import Any
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.geom.wkb import wkb_to_geojson
+
+# decode_row runs inside the hydration stage's Python workers: ship
+# this module's functions by value so workers need no copy of the package
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # pypgstac's dehydration sentinel: a value set to this marker in the
 # stored item means "the base item's value does NOT apply here"
@@ -273,7 +279,7 @@ def parse_item_strings(spark: SparkSession, items: DataFrame) -> DataFrame:
     """JSON-string column -> JSON-shape item DataFrame (schema inferred
     by Spark's JSON reader — the FullFile strategy); feed the result to
     stac.forward.normalize_items."""
-    from stac_geoparquet_spark.stac.forward import _stringify_geometry_fields
+    from stac_geoparquet_spark.stac.forward import geometry_as_strings
 
     # Persist the JSON strings before the two json() passes (inference
     # + typed read): without it the ENTIRE upstream pipeline — the
@@ -284,7 +290,7 @@ def parse_item_strings(spark: SparkSession, items: DataFrame) -> DataFrame:
     # blocks; it is evicted LRU or with the session.
     ds = items.select(F.col("item_json").alias("value")).cache()
     inferred = spark.read.json(ds.rdd.map(lambda r: r[0])).schema
-    patched = _stringify_geometry_fields(inferred)
+    patched = geometry_as_strings(inferred)
     # typed pass stays JVM-side: from_json runs the same Jackson parser
     # the reader would, without piping every row through a Python
     # worker a second time (the rdd.map form re-serialized the whole

@@ -7,7 +7,14 @@
 - WGS84 PROJJSON: stac_geoparquet/arrow/_crs.py (the reference embeds
   pyproj's PROJJSON export of EPSG:4326; reproduced here from the
   public PROJJSON schema since pyproj is unavailable).
+- Geometry fields and bbox struct fields: the column layout every
+  conversion step and the sink agree on (arrow/_batch.py:96-122,
+  arrow/_to_arrow.py:106-200).
 """
+
+from __future__ import annotations
+
+from pyspark.sql import types as T
 
 TOP_LEVEL_KEYS = frozenset(
     {
@@ -49,6 +56,44 @@ DATETIME_COLUMNS = frozenset(
         "unpublished",
     }
 )
+
+#: bbox struct field order by bbox length (arrow/_to_arrow.py:106-200);
+#: the 2-D fields are also the GeoParquet 1.1 ``covering`` and the
+#: columns spatial filters compare against
+BBOX_FIELDS = {
+    4: ("xmin", "ymin", "xmax", "ymax"),
+    6: ("xmin", "ymin", "zmin", "xmax", "ymax", "zmax"),
+}
+
+
+def _field_type(dt: T.DataType, path: tuple[str, ...]) -> T.DataType | None:
+    for name in path:
+        if not isinstance(dt, T.StructType) or name not in dt.names:
+            return None
+        dt = dt[name].dataType
+    return dt
+
+
+def geometry_paths(
+    schema: T.DataType, leaf: type[T.DataType] | None = None
+) -> list[tuple[str, ...]]:
+    """The geometry fields the reference converts (arrow/_batch.py:96-122)
+    that ``schema`` holds: top-level ``geometry``, the item's
+    ``proj:geometry`` (nested under ``properties`` or hoisted to the top
+    level) and ``assets.<key>.proj:geometry``. ``leaf`` keeps only the
+    fields of that type (StringType before T1, BinaryType after it).
+    Any other field named ``geometry`` is ordinary item data."""
+    paths = [("geometry",), ("proj:geometry",), ("properties", "proj:geometry")]
+    assets = _field_type(schema, ("assets",))
+    if isinstance(assets, T.StructType):
+        paths += [("assets", a, "proj:geometry") for a in assets.names]
+    return [
+        p
+        for p in paths
+        if (dt := _field_type(schema, p)) is not None
+        and (leaf is None or isinstance(dt, leaf))
+    ]
+
 
 DEFAULT_JSON_CHUNK_SIZE = 65536  # arrow/_constants.py:5-6
 

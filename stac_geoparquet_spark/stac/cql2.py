@@ -38,6 +38,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.stac.constants import BBOX_FIELDS
+
 _CMP = {
     "=": lambda a, b: a == b,
     "<>": lambda a, b: a != b,
@@ -55,7 +57,7 @@ _ARITH = {
     "%": lambda a, b: a % b,
 }
 
-#: column holding the 2-D bbox struct {xmin, ymin, xmax, ymax}
+#: column holding the 2-D bbox struct (fields ``BBOX_FIELDS[4]``)
 BBOX_COL = "bbox"
 
 
@@ -135,12 +137,12 @@ def _bbox_intersects(env: tuple[float, float, float, float]) -> Column:
         return _bbox_intersects((xmin, ymin, 180.0, ymax)) | _bbox_intersects(
             (-180.0, ymin, xmax, ymax)
         )
-    b = F.col(BBOX_COL)
+    lo_x, lo_y, hi_x, hi_y = (F.col(BBOX_COL)[n] for n in BBOX_FIELDS[4])
     return (
-        (b["xmin"] <= F.lit(xmax))
-        & (b["xmax"] >= F.lit(xmin))
-        & (b["ymin"] <= F.lit(ymax))
-        & (b["ymax"] >= F.lit(ymin))
+        (lo_x <= F.lit(xmax))
+        & (hi_x >= F.lit(xmin))
+        & (lo_y <= F.lit(ymax))
+        & (hi_y >= F.lit(ymin))
     )
 
 

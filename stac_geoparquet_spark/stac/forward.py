@@ -31,22 +31,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stac_geoparquet_spark.geom import wkb as _wkb_mod
+from stac_geoparquet_spark.geom.wkb import geojson_to_wkb
 from stac_geoparquet_spark.stac.constants import (
+    BBOX_FIELDS,
     CANONICAL_ORDER,
     DATETIME_COLUMNS,
     GEOARROW_EXTENSION_NAME,
-    TOP_LEVEL_KEYS,
     WGS84_PROJJSON,
+    geometry_paths,
 )
-
-try:  # make the WKB codec pickle by value so executors never need the
-    # package on their PYTHONPATH (driver-owned sessions included)
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(_wkb_mod)
-except Exception:  # pragma: no cover - older cloudpickle
-    pass
 
 
 # ---------------------------------------------------------------------------
@@ -92,34 +85,31 @@ def _sniff_format(spark: SparkSession, path: str) -> str:
         return "array"
 
 
-_GEOM_FIELD_NAMES = ("geometry", "proj:geometry")
+def _with_type(dt: T.StructType, path: tuple[str, ...], new: T.DataType) -> T.StructType:
+    """``dt`` with the field at ``path`` retyped to ``new``."""
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                _with_type(f.dataType, path[1:], new) if path[1:] else new,
+                f.nullable or not path[1:],
+            )
+            if f.name == path[0]
+            else f
+            for f in dt.fields
+        ]
+    )
 
 
-def _stringify_geometry_fields(dt: T.DataType, path: tuple[str, ...] = ()) -> T.DataType:
-    """Rewrite a schema so every geometry-bearing field is StringType.
+def geometry_as_strings(schema: T.StructType) -> T.StructType:
+    """Retype every geometry field T1 encodes to StringType.
 
     Spark then yields the raw JSON text for those fields, keeping
     heterogeneous geometry types intact until the WKB UDF (T1).
     """
-    if isinstance(dt, T.StructType):
-        fields = []
-        for f in dt.fields:
-            if f.name in _GEOM_FIELD_NAMES:
-                fields.append(T.StructField(f.name, T.StringType(), True))
-            else:
-                fields.append(
-                    T.StructField(
-                        f.name,
-                        _stringify_geometry_fields(f.dataType, path + (f.name,)),
-                        f.nullable,
-                    )
-                )
-        return T.StructType(fields)
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(
-            _stringify_geometry_fields(dt.elementType, path), dt.containsNull
-        )
-    return dt
+    for path in geometry_paths(schema):
+        schema = _with_type(schema, path, T.StringType())
+    return schema
 
 
 def read_stac_json(
@@ -132,49 +122,34 @@ def read_stac_json(
     string ready for T1).
 
     Two passes when no schema is given (inference then typed read) —
-    the same contract as the reference (arrow/_api.py:237-261).
+    the same contract as the reference (arrow/_api.py:237-261). A
+    FeatureCollection's schema is inferred over ALL paths (a field
+    present only in later files would otherwise be dropped) and its
+    ``features`` are exploded into item rows.
     """
     first_path = path if isinstance(path, str) else path[0]
     fmt = _sniff_format(spark, first_path)
-
-    def _read(s: T.StructType | None) -> DataFrame:
-        if fmt == "featurecollection" and s is not None:
-            # caller-provided schemas describe an ITEM (the shape every
-            # other path consumes, e.g. infer_items_schema output);
-            # wrap it into the FeatureCollection envelope so the read
-            # applies it to `features` elements, not the wrapper doc
-            s = T.StructType(
-                [
-                    T.StructField("type", T.StringType(), True),
-                    T.StructField("features", T.ArrayType(s), True),
-                ]
-            )
-        reader = spark.read
-        if s is not None:
-            reader = reader.schema(s)
-        if fmt == "ndjson":
-            return reader.json(path)
-        if fmt == "array":
-            return reader.option("multiLine", "true").json(path)
-        # FeatureCollection: read the wrapper, explode features
-        df = reader.option("multiLine", "true").json(path)
-        return df.select(F.explode("features").alias("item")).select("item.*")
-
+    reader = spark.read
+    if fmt != "ndjson":
+        reader = reader.option("multiLine", "true")
     if schema is None:
+        schema = reader.json(path).schema
         if fmt == "featurecollection":
-            # Infer the WRAPPER schema over ALL paths (not just the
-            # first file — a field present only in later files would
-            # otherwise be silently dropped), then do the typed read +
-            # explode.  One inference pass total.
-            wrapper = spark.read.option("multiLine", "true").json(path).schema
-            patched = _stringify_geometry_fields(wrapper)
-            reader = spark.read.schema(patched).option("multiLine", "true")
-            df = reader.json(path)
-            return df.select(F.explode("features").alias("item")).select("item.*")
-        inferred = _read(None).schema
-        patched = _stringify_geometry_fields(inferred)
-        return _read(patched)
-    return _read(_stringify_geometry_fields(schema))
+            schema = schema["features"].dataType.elementType
+    schema = geometry_as_strings(schema)
+    if fmt != "featurecollection":
+        return reader.schema(schema).json(path)
+    # caller-provided and inferred schemas describe an ITEM; wrap it
+    # into the FeatureCollection envelope so the read applies it to the
+    # `features` elements, not the wrapper document
+    wrapper = T.StructType(
+        [
+            T.StructField("type", T.StringType(), True),
+            T.StructField("features", T.ArrayType(schema), True),
+        ]
+    )
+    df = reader.schema(wrapper).json(path)
+    return df.select(F.explode("features").alias("item")).select("item.*")
 
 
 # ---------------------------------------------------------------------------
@@ -184,7 +159,7 @@ def _make_wkb_encode_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    encode = _wkb_mod.geojson_to_wkb
+    encode = geojson_to_wkb
 
     def _encode_series(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if v is None else encode(v))
@@ -193,45 +168,19 @@ def _make_wkb_encode_udf():
     return pandas_udf(_encode_series, T.BinaryType())
 
 
-def _geometry_string_paths(schema: T.StructType) -> list[list[str]]:
-    """Discover geometry columns to encode: top-level ``geometry``,
-    ``properties.proj:geometry`` and ``assets.<k>.proj:geometry``
-    (arrow/_batch.py:96-122)."""
-    paths: list[list[str]] = []
-    names = {f.name: f for f in schema.fields}
-    if "geometry" in names and isinstance(names["geometry"].dataType, T.StringType):
-        paths.append(["geometry"])
-    props = names.get("properties")
-    if props is not None and isinstance(props.dataType, T.StructType):
-        for f in props.dataType.fields:
-            if f.name == "proj:geometry" and isinstance(f.dataType, T.StringType):
-                paths.append(["properties", "proj:geometry"])
-    assets = names.get("assets")
-    if assets is not None and isinstance(assets.dataType, T.StructType):
-        for a in assets.dataType.fields:
-            if isinstance(a.dataType, T.StructType):
-                for f in a.dataType.fields:
-                    if f.name == "proj:geometry" and isinstance(
-                        f.dataType, T.StringType
-                    ):
-                        paths.append(["assets", a.name, "proj:geometry"])
-    return paths
-
-
 def encode_geometries(df: DataFrame) -> DataFrame:
-    """T1: every geometry-bearing string column -> ISO WKB binary."""
-    paths = _geometry_string_paths(df.schema)
+    """T1: every geometry string column (``geometry_paths``) -> ISO WKB binary."""
+    paths = geometry_paths(df.schema, T.StringType)
     if not paths:
         return df
     udf = _make_wkb_encode_udf()
-    for path in paths:
-        if len(path) == 1:
-            df = df.withColumn("geometry", udf(F.col("geometry")))
+    for top, *nested in paths:
+        if not nested:
+            df = df.withColumn(top, udf(F.col(f"`{top}`")))
         else:
-            top = path[0]
-            nested = ".".join(f"`{p}`" for p in path[1:])
-            src = F.col(".".join(f"`{p}`" for p in path))
-            df = df.withColumn(top, F.col(top).withField(nested, udf(src)))
+            src = F.col(".".join(f"`{p}`" for p in (top, *nested)))
+            field = ".".join(f"`{p}`" for p in nested)
+            df = df.withColumn(top, F.col(top).withField(field, udf(src)))
     return df
 
 
@@ -313,25 +262,12 @@ def bbox_to_struct(df: DataFrame) -> DataFrame:
                 f"mixed 2-D/3-D bboxes in one table: sizes {sizes['lo']}..{sizes['hi']}"
             )
         ndim = sizes["lo"]
-    b = F.col("bbox")
-    if ndim == 4:
-        struct = F.struct(
-            b[0].cast("double").alias("xmin"),
-            b[1].cast("double").alias("ymin"),
-            b[2].cast("double").alias("xmax"),
-            b[3].cast("double").alias("ymax"),
-        )
-    elif ndim == 6:
-        struct = F.struct(
-            b[0].cast("double").alias("xmin"),
-            b[1].cast("double").alias("ymin"),
-            b[2].cast("double").alias("zmin"),
-            b[3].cast("double").alias("xmax"),
-            b[4].cast("double").alias("ymax"),
-            b[5].cast("double").alias("zmax"),
-        )
-    else:
+    if ndim not in BBOX_FIELDS:
         raise ValueError(f"bbox must have 4 or 6 values, got {ndim}")
+    b = F.col("bbox")
+    struct = F.struct(
+        *[b[i].cast("double").alias(n) for i, n in enumerate(BBOX_FIELDS[ndim])]
+    )
     return df.withColumn("bbox", F.when(b.isNotNull(), struct))
 
 

@@ -20,21 +20,25 @@ from __future__ import annotations
 
 import json
 import math
+import sys
 from typing import Any, Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stac_geoparquet_spark.geom import wkb as _wkb_mod
-from stac_geoparquet_spark.stac.constants import DATETIME_COLUMNS, TOP_LEVEL_KEYS
+from stac_geoparquet_spark.geom.wkb import wkb_to_geojson
+from stac_geoparquet_spark.stac.constants import (
+    BBOX_FIELDS,
+    DATETIME_COLUMNS,
+    TOP_LEVEL_KEYS,
+    geometry_paths,
+)
 
-try:
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(_wkb_mod)
-except Exception:  # pragma: no cover
-    pass
+# row_to_item runs inside the NDJSON sink's Python workers: ship this
+# module's functions by value so workers need no copy of the package
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # The reference formats with pc.strftime("%Y-%m-%dT%H:%M:%SZ")
 # (arrow/_from_arrow.py:24-28), and Arrow's %S — unlike C strftime —
@@ -107,11 +111,8 @@ def bbox_to_array(df: DataFrame) -> DataFrame:
     if not isinstance(dt, T.StructType):
         return df
     names = [f.name for f in dt.fields]
-    if set(names) == {"xmin", "ymin", "xmax", "ymax"}:
-        order = ["xmin", "ymin", "xmax", "ymax"]
-    elif set(names) == {"xmin", "ymin", "zmin", "xmax", "ymax", "zmax"}:
-        order = ["xmin", "ymin", "zmin", "xmax", "ymax", "zmax"]
-    else:
+    order = next((o for o in BBOX_FIELDS.values() if set(o) == set(names)), None)
+    if order is None:
         raise ValueError(f"unexpected bbox struct fields: {names}")
     arr = F.array(*[F.col(f"bbox.{n}") for n in order])
     return df.withColumn(
@@ -131,28 +132,6 @@ def to_json_shape(df: DataFrame, precision: str = "us") -> DataFrame:
 # ---------------------------------------------------------------------------
 # U4/U5 — JSON boundary
 # ---------------------------------------------------------------------------
-def _geometry_binary_paths(schema: T.StructType) -> list[tuple[str, ...]]:
-    """Schema walk for WKB columns: ['geometry'],
-    ['properties','proj:geometry'], ['assets',<k>,'proj:geometry']
-    (arrow/_batch.py:137-154)."""
-    paths: list[tuple[str, ...]] = []
-
-    def walk(dt: T.DataType, path: tuple[str, ...]):
-        if isinstance(dt, T.StructType):
-            for f in dt.fields:
-                p = path + (f.name,)
-                if isinstance(f.dataType, T.BinaryType) and f.name in (
-                    "geometry",
-                    "proj:geometry",
-                ):
-                    paths.append(p)
-                else:
-                    walk(f.dataType, p)
-
-    walk(schema, ())
-    return paths
-
-
 def _clean(v: Any) -> Any:
     """Make a collected value JSON-serializable: numpy scalars/arrays to
     Python, tuples to lists, drop nothing (null handling is caller's)."""
@@ -206,7 +185,7 @@ def row_to_item(row_dict: dict, geom_paths: list[tuple[str, ...]]) -> dict:
     for path in geom_paths:
         raw = _get_path(item, path)
         if raw is not None:
-            _set_path(item, path, _wkb_mod.wkb_to_geojson(raw))
+            _set_path(item, path, wkb_to_geojson(raw))
     assets = item.get("assets")
     if isinstance(assets, dict):
         # U5: struct-union artifacts — assets whose value is entirely
@@ -228,7 +207,7 @@ def to_item_dicts(df: DataFrame, precision: str = "us") -> Iterator[dict]:
     arrow/_api.py:347-367). Streams via toLocalIterator — the driver
     never holds the full table."""
     shaped = to_json_shape(df, precision=precision)
-    geom_paths = _geometry_binary_paths(shaped.schema)
+    geom_paths = geometry_paths(shaped.schema, T.BinaryType)
     for row in shaped.toLocalIterator():
         yield row_to_item(row.asDict(recursive=True), geom_paths)
 
@@ -236,13 +215,8 @@ def to_item_dicts(df: DataFrame, precision: str = "us") -> Iterator[dict]:
 def to_ndjson(df: DataFrame, path: str, precision: str = "us", mode: str = "append") -> None:
     """Distributed NDJSON sink (K3, arrow/_api.py:370-403): one JSON
     line per item, written in parallel as text partitions."""
-    from stac_geoparquet_spark.session import ensure_worker_imports
-
-    # emit's closure references row_to_item by module reference; ship
-    # the package so workers can import it whatever the driver's cwd
-    ensure_worker_imports(df.sparkSession)
     shaped = to_json_shape(df, precision=precision)
-    geom_paths = _geometry_binary_paths(shaped.schema)
+    geom_paths = geometry_paths(shaped.schema, T.BinaryType)
     out_schema = T.StructType([T.StructField("json", T.StringType())])
 
     def emit(batches):

@@ -211,6 +211,19 @@ def bbox3d_items(n: int = 2) -> list[dict]:
     ]
 
 
+def nested_geometry_items() -> list[dict]:
+    """A GeoJSON object in a field named ``geometry`` that is none of
+    the three converted geometry paths: it is plain item data and must
+    round-trip as an object, not as WKB or a JSON string."""
+    items = naip_like_items(2)
+    for i, it in enumerate(items):
+        it["properties"]["footprint"] = {
+            "geometry": {"type": "Point", "coordinates": [float(i), 2.0]},
+            "source": "survey",
+        }
+    return items
+
+
 def collision_item() -> dict:
     """F6.1: a property named 'collection' colliding with the top-level
     column."""

@@ -1284,20 +1284,22 @@ def test_oov_rate_vocab_is_takeordered_broadcast(spark, sf):
 
 
 def test_anomaly_mad_is_rollup_plus_broadcast_medians(spark, sf):
-    """Both medians aggregate the calendar-bounded HOURLY ROLLUP —
-    which is FENCED, so the returned plan reads the materialized
-    rollup (one events scan total, at build time) — and come back as
-    ONE broadcast join; no window anywhere (the robustness win over
+    """Both medians aggregate the calendar-bounded HOURLY ROLLUP in
+    windows partitioned by the event-type alphabet: the med -> absdev
+    -> mad chain is TWO windows over the rollup, in ONE plan with ONE
+    events scan; no join at all (the statistics are no longer joined
+    back), and no window over raw events (the robustness win over
     events_hourly_anomaly's mean/sd window)."""
     from stac_geoparquet_spark.operators import quality
 
     plan = plan_of(quality.events_anomaly_mad(spark, sf))
-    assert n_ops(plan, "Window") == 0
-    assert n_ops(plan, "BroadcastHashJoin") == 1
+    assert n_ops(plan, "Window") == 2
+    assert n_ops(plan, "BroadcastHashJoin") == 0
     assert n_ops(plan, "SortMergeJoin") == 0
     assert "percentile" in plan
-    # the fence is real: the returned plan never rescans the parquet
-    assert "events.parquet" not in plan
+    # the one scan of the plan is the events parquet
+    assert n_ops(plan, "Scan parquet") == 1
+    assert "events.parquet" in plan
 
 
 def test_dup_rate_by_source_is_one_keyed_rollup(spark, sf):
@@ -1541,20 +1543,21 @@ def test_fdr_bh_alphabet_windows_after_aggregate(spark, sf):
     """FDR-BH: one (event_type, user)-keyed corpus aggregate, an
     alphabet-sized moment rollup, then unpartitioned rank/suffix-min
     windows whose input is the bounded per-type row set (the
-    jackknife bounded-frame class); the m count joins back broadcast.
-    No cartesian, no sort-merge, no Python."""
+    jackknife bounded-frame class); the m count rides one more
+    unpartitioned window on each branch instead of a join, so the plan
+    holds no join at all. No cartesian, no sort-merge, no Python."""
     from stac_geoparquet_spark.operators import timeseries
 
     plan = plan_of(timeseries.events_fdr_bh(spark, sf))
     assert n_ops(plan, "CartesianProduct") == 0
     assert n_ops(plan, "SortMergeJoin") == 0
     assert "BatchEvalPython" not in plan
-    # the alphabet-bounded moment table is FENCED: its three consumers
-    # (m count, testable branch, untestable branch) read materialized
-    # rows — the final plan holds ZERO corpus scans
+    # the alphabet-bounded moment table is FENCED: its two consumers
+    # (testable branch, untestable branch) read materialized rows —
+    # the final plan holds ZERO corpus scans
     assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Scan ExistingRDD") >= 3
-    assert n_ops(plan, "BroadcastNestedLoopJoin") == 2  # m onto each
+    assert n_ops(plan, "Scan ExistingRDD") >= 2
+    assert n_ops(plan, "BroadcastNestedLoopJoin") == 0  # m is a window
 
 
 def test_harmonic_centrality_topk_over_fences(spark, sf):
@@ -1856,14 +1859,15 @@ def test_benford_single_orders_scan(spark, sf):
 
 def test_attribution_single_user_window(spark, sf):
     """The carry-forward runs in ONE window over the scaling user_id;
-    the touch rollup is fenced so the totals join reads materialized
-    rows — the returned plan has no events scan and no second
-    window."""
+    the grand total rides ONE more, unpartitioned window over the
+    type-alphabet-bounded touch rollup (no fence, no totals join) —
+    two windows in the returned plan, which reads the canonical
+    events layout, never the raw events parquet."""
     from stac_geoparquet_spark.operators import audit
 
     plan = plan_of(audit.events_attribution_last_touch(spark, sf))
-    assert "events.parquet" not in plan  # canon layout + fence upstream
-    assert n_ops(plan, "Window") == 0  # window ran at build time
+    assert "events.parquet" not in plan  # canon layout upstream
+    assert n_ops(plan, "Window") == 2  # user carry-forward + total
     assert "CartesianProduct" not in plan
 
 
@@ -2762,34 +2766,36 @@ def test_theil_sen_fenced_rollup_one_window(spark, sf):
 
 
 def test_heaps_fit_fenced_curve(spark, sf):
-    """The Heaps output joins the FENCED 10-row curve with its fit —
-    the two corpus passes (first occurrence, lengths) and the cutoff
-    broadcast ran once at build time; the consumer plan holds no
-    parquet scan, no window, no cartesian, no Python."""
+    """The Heaps curve is built in the returned plan: two corpus passes
+    (first occurrence, lengths — one parquet scan each), each joined to
+    the FENCED 10-row cutoff table (read as ExistingRDD, so the max-id
+    scan ran once at build time); the regression fit is ONE
+    unpartitioned window over the 10-row curve. No cartesian, no
+    Python."""
     from stac_geoparquet_spark.operators import curation
 
     plan = plan_of(curation.text_heaps_law_fit(spark, sf))
-    assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Window") == 0
+    assert n_ops(plan, "Scan parquet") == 2
+    assert n_ops(plan, "Window") == 1
     assert n_ops(plan, "CartesianProduct") == 0
     assert "BatchEvalPython" not in plan
     assert "ExistingRDD" in plan
 
 
 def test_bootstrap_ci_one_point_pass(spark, sf):
-    """The percentile CI ranks the FENCED 200-row replicate means (the
-    x B explode ran once at build time); the consumer plan is the one
-    point-estimate scan + the bounded rank — one parquet scan, one
-    window over the constant replicate table, no cartesian, no
-    Python."""
+    """No fence: the returned plan holds the point-estimate pass and
+    the x B replicate explode, one events scan each; the 200-row
+    replicate means are ranked by TWO windows over that bounded table
+    (the rep count rides an unpartitioned window instead of a 1-row
+    broadcast). No cartesian, no Python, no materialized input."""
     from stac_geoparquet_spark.operators import timeseries
 
     plan = plan_of(timeseries.events_bootstrap_ci(spark, sf))
-    assert n_ops(plan, "Scan parquet") == 1
-    assert n_ops(plan, "Window") == 1
+    assert n_ops(plan, "Scan parquet") == 2
+    assert n_ops(plan, "Window") == 2
     assert n_ops(plan, "CartesianProduct") == 0
     assert "BatchEvalPython" not in plan
-    assert "ExistingRDD" in plan
+    assert n_ops(plan, "Scan ExistingRDD") == 0
 
 
 def test_rm3_one_filtered_tokenize_pass(spark, sf):
@@ -2809,15 +2815,16 @@ def test_rm3_one_filtered_tokenize_pass(spark, sf):
 
 
 def test_stl_decompose_fenced_rollup(spark, sf):
-    """The decomposition consumes the fenced calendar rollup and the
-    fenced 7-row seasonal table: no parquet scan, no window, no
-    cartesian, no Python in the consumer plan — the x7 lag explode
-    and both tiny aggregates are hash joins on the fence."""
+    """The decomposition consumes the fenced calendar rollup: no
+    parquet scan, no cartesian, no Python in the consumer plan — the
+    x7 lag explode and both tiny aggregates are hash joins on the
+    fence, and the seasonal centering mean is ONE unpartitioned window
+    over the 7-row day-of-week table."""
     from stac_geoparquet_spark.operators import timeseries
 
     plan = plan_of(timeseries.orders_stl_decompose(spark, sf))
     assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Window") == 0
+    assert n_ops(plan, "Window") == 1
     assert n_ops(plan, "CartesianProduct") == 0
     assert "BatchEvalPython" not in plan
     assert "ExistingRDD" in plan

@@ -26,6 +26,7 @@ FIXTURES = {
     "lidar_like": fx.lidar_like_items(),
     "heterogeneous_geometry": fx.heterogeneous_geometry_items(),
     "bbox3d": fx.bbox3d_items(),
+    "nested_geometry": fx.nested_geometry_items(),
 }
 
 

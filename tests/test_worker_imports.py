@@ -4,7 +4,9 @@ sys.path only — Python workers don't inherit driver-side sys.path
 edits. A worker-side closure that references a module-level function
 gets pickled BY REFERENCE by cloudpickle and explodes with
 ModuleNotFoundError on the worker (this exact failure shipped once:
-the IVF closures calling module-level _assign_cells).
+the IVF closures calling module-level _assign_cells). Modules whose
+functions run on workers either keep their closures self-contained or
+register themselves with cloudpickle.register_pickle_by_value.
 
 This test reruns the UDF-shipping operators in a subprocess whose cwd
 is a temp dir and whose environment carries no PYTHONPATH — the same
@@ -38,6 +40,19 @@ for fn in (ivf_cell_assignment, ann_ivf_probe, knn_brute_force,
            semdedup_incremental, pq_encode_codes, ann_pq_adc,
            *MM.values()):
     fn(spark, sf).count()
+# pgstac hydration runs before any other STAC stage, so nothing
+# shipped earlier can mask a missing by-value registration
+import json
+from stac_geoparquet_spark.geom.wkb import geojson_to_wkb
+from stac_geoparquet_spark.sources.pgstac import hydrate_rows, parse_item_strings
+rows = spark.createDataFrame(
+    [('i1', geojson_to_wkb({{'type': 'Point', 'coordinates': [1.0, 2.0]}}).hex(),
+      'c', json.dumps({{'type': 'Feature', 'properties': {{'datetime': '2024-01-01T00:00:00Z'}}}}))],
+    'id string, geometry string, collection string, content string')
+bases = spark.createDataFrame([('c', json.dumps({{'links': []}}))],
+                              'collection string, base_item string')
+items = parse_item_strings(spark, hydrate_rows(rows, bases))
+assert items.select('bbox').first()[0] == [1.0, 2.0, 1.0, 2.0]
 from tests import stac_fixtures as fx
 from stac_geoparquet_spark.stac.forward import read_items
 from stac_geoparquet_spark.stac.inverse import to_ndjson
